@@ -1,0 +1,20 @@
+package perfbench
+
+/** Minimal JSON writing for the result line and the span file. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def num(v: Double): String =
+    if (v.isNaN || v.isInfinite) "null" else BigDecimal(v).toString
+
+  def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
+}
