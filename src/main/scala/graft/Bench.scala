@@ -111,15 +111,21 @@ object Bench {
     // line a compact (<1 kB) summary that survives the tail capture:
     // totals + pass totals + the top-10 slowest + the sidecar path.
     println(fullLine)
+    // a previous run's sidecar is deleted first, and a failed write
+    // reports null: the path printed always holds THIS run's record
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES_FILE",
       s"/tmp/graft_bench_queries_c$cpus.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // the stdout lines are the record
+    val queriesFile = try {
+      val p = java.nio.file.Paths.get(sidecar)
+      java.nio.file.Files.deleteIfExists(p)
+      java.nio.file.Files.write(p,
+        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      "\"" + sidecar + "\""
+    } catch { case scala.util.control.NonFatal(_) => "null" } // the stdout lines are the record
     val slow10 = sorted.takeRight(10).reverse
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"total_pass1":${ms(passTotal(pass1))},"total_pass2":${ms(passTotal(pass2))},"total_min":${ms(total)},"total":${ms(total)},"queries_file":"$sidecar","slowest":$slow10}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"total_pass1":${ms(passTotal(pass1))},"total_pass2":${ms(passTotal(pass2))},"total_min":${ms(total)},"total":${ms(total)},"queries_file":$queriesFile,"slowest":$slow10}""")
     spark.stop()
   }
 }

@@ -1,6 +1,10 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CancellationException, Executors, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Builder-semantics orchestration layer (SURVEY.md §1.1/§2.1): the
@@ -11,10 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark-native re-expression: a job is a DataFrame transformation from
   * named parquet inputs to one parquet target; Spark's own DAG handles
   * intra-job parallelism, this runner handles the cross-job graph:
-  * topo order, content-fingerprint staleness (skip when every dep's
-  * file listing matches what the target was built from — builder's
-  * mtime rule de-clocked; see [[PipelineRunner.isStale]]), and
-  * cache_time debounce.
+  * one scheduler (topo order; parallelism 1 is sequential; a failure
+  * cancels its siblings and surfaces with the partial result),
+  * content-fingerprint staleness (skip when every dep's file listing
+  * matches what the target was built from — builder's mtime rule
+  * de-clocked; see [[PipelineRunner.isStale]]), and cache_time debounce.
   */
 final case class PipelineJob(
     name: String,
@@ -27,6 +32,15 @@ final case class PipelineJob(
     val run: (SparkSession, Map[String, DataFrame]) => DataFrame)
 
 final case class PipelineResult(ran: Seq[String], skipped: Seq[String])
+
+/** A pipeline job failed after its retries. By the time this is thrown
+  * every sibling has been cancelled and has returned; `partial` holds
+  * the jobs that completed (`ran`) or were found fresh (`skipped`)
+  * before that.
+  */
+final class PipelineFailed(val job: String, val partial: PipelineResult,
+    cause: Throwable)
+    extends RuntimeException(s"pipeline job '$job' failed: $cause", cause)
 
 /** A templated job instantiated once per time bucket — builder's
   * unexpanded Job + TimestampExpander pair (SURVEY.md §2.1 B2). `%dt`
@@ -188,21 +202,42 @@ class PipelineRunner(spark: SparkSession, root: String) {
     jobs.map(j => j.target -> j).toMap
   }
 
+  /** The rule graph, indexed once per call: producer by target, and
+    * each target's consumers in input job order. Every walk below is
+    * linear in jobs + edges over this index.
+    */
+  private final class Graph(jobs: Seq[PipelineJob]) {
+    val byTarget: Map[String, PipelineJob] = indexByTarget(jobs)
+    private val consumers: Map[String, Seq[PipelineJob]] =
+      jobs.flatMap(j => j.deps.distinct.map(_ -> j)).groupMap(_._1)(_._2)
+    /** Unfinished producer deps per job target. */
+    private val pending = mutable.HashMap.from(jobs.map(j =>
+      j.target -> j.deps.distinct.count(byTarget.contains)))
+
+    def consumersOf(target: String): Seq[PipelineJob] =
+      consumers.getOrElse(target, Nil)
+
+    /** Kahn's seed: the jobs with no producer deps, by target. */
+    def sources: Seq[PipelineJob] =
+      jobs.filter(j => pending(j.target) == 0).sortBy(_.target)
+
+    /** Mark `job` finished; returns the consumers it made ready. */
+    def release(job: PipelineJob): Seq[PipelineJob] =
+      consumersOf(job.target).filter { c =>
+        pending(c.target) -= 1
+        pending(c.target) == 0
+      }
+  }
+
   /** Topological order via Kahn's algorithm; cycles are an error. */
   def topoSort(jobs: Seq[PipelineJob]): Seq[PipelineJob] = {
-    val byTarget = indexByTarget(jobs)
-    val indeg = collection.mutable.Map(jobs.map(j =>
-      j.target -> j.deps.count(byTarget.contains)): _*)
-    val ready = collection.mutable.Queue(
-      jobs.filter(j => indeg(j.target) == 0).map(_.target).sorted: _*)
-    val out = collection.mutable.ArrayBuffer[PipelineJob]()
+    val g = new Graph(jobs)
+    val ready = mutable.Queue.from(g.sources)
+    val out = mutable.ArrayBuffer[PipelineJob]()
     while (ready.nonEmpty) {
-      val t = ready.dequeue()
-      out += byTarget(t)
-      jobs.filter(_.deps.contains(t)).foreach { d =>
-        indeg(d.target) -= 1
-        if (indeg(d.target) == 0) ready.enqueue(d.target)
-      }
+      val j = ready.dequeue()
+      out += j
+      ready ++= g.release(j)
     }
     require(out.size == jobs.size, "pipeline graph has a cycle")
     out.toSeq
@@ -239,67 +274,113 @@ class PipelineRunner(spark: SparkSession, root: String) {
     }
   }
 
-  /** Builder's ExecutionManager run loop (SURVEY.md §2.1 B8):
-    * event-driven parallel execution — every job whose parents are done
-    * runs concurrently on a bounded pool, completion releases
-    * downstream jobs, and failures retry up to `maxRetries` before
-    * aborting the build. Spark sessions are thread-safe; concurrent
-    * jobs become concurrent Spark jobs sharing the cluster (use
-    * scheduler pools for fairness at scale). Staleness/skip semantics
-    * identical to [[run]].
+  /** Builder's ExecutionManager run loop (SURVEY.md §2.1 B8) — the one
+    * loop behind [[run]], [[runForced]] and [[runParallel]]. Kahn's walk
+    * with a FIFO ready queue: a job is decided when it leaves the queue
+    * (run if `dirty`, stale, or a dep ran in this call; otherwise skip),
+    * and at most `parallelism` jobs run at once on a fixed pool. A skip
+    * releases its consumers at once, so at parallelism 1 jobs run and
+    * skip in exactly [[topoSort]]'s order. Each worker tags its Spark
+    * jobs with this call's tag. A job retries NonFatal errors up to
+    * `maxRetries` times. Once it gives up, no further job starts and
+    * nothing retries; in-flight Spark jobs are cancelled by tag until
+    * every worker has returned, and only then does [[PipelineFailed]]
+    * surface with what completed. Spark sessions are thread-safe;
+    * concurrent jobs become concurrent Spark jobs sharing the cluster.
+    */
+  private def schedule(jobs: Seq[PipelineJob], parallelism: Int,
+      maxRetries: Int, dirty: Set[String]): PipelineResult = {
+    topoSort(jobs) // validates the DAG before any job runs
+    val g = new Graph(jobs)
+    val ready = mutable.Queue.from(g.sources)
+    val now = System.currentTimeMillis()
+    val ran, skipped = mutable.ArrayBuffer[String]()
+    val ranTargets = mutable.Set[String]()
+    val tag = s"graft-pipeline-${java.util.UUID.randomUUID()}"
+    val aborting = new AtomicBoolean(false)
+    val finished = new LinkedBlockingQueue[(PipelineJob, Option[Throwable])]()
+    val pool = Executors.newFixedThreadPool(parallelism, r => {
+      val t = new Thread(r, "graft-pipeline")
+      t.setDaemon(true)
+      t
+    })
+    var inFlight = 0
+    var failure: Option[(PipelineJob, Throwable)] = None
+
+    def complete(job: PipelineJob, error: Option[Throwable]): Unit = {
+      inFlight -= 1
+      error match {
+        case None => ran += job.name; ranTargets += job.target
+        case Some(e) => if (failure.isEmpty) failure = Some(job -> e)
+      }
+    }
+
+    try {
+      while (failure.isEmpty && (ready.nonEmpty || inFlight > 0)) {
+        if (ready.nonEmpty && inFlight < parallelism) {
+          val job = ready.dequeue()
+          if (dirty(job.target) || isStale(job, now) ||
+              job.deps.exists(ranTargets.contains)) {
+            inFlight += 1
+            pool.execute(() =>
+              finished.put(job -> attempt(job, tag, maxRetries, aborting)))
+          } else {
+            skipped += job.name
+            ready ++= g.release(job)
+          }
+        } else {
+          val (job, error) = finished.take()
+          complete(job, error)
+          if (error.isEmpty) ready ++= g.release(job)
+        }
+      }
+    } finally {
+      // after a failure, or any exception on this thread (an interrupt,
+      // a staleness check that threw): no worker outlives the call
+      aborting.set(true)
+      while (inFlight > 0) {
+        spark.sparkContext.cancelJobsWithTag(tag)
+        Option(finished.poll(50, TimeUnit.MILLISECONDS))
+          .foreach { case (job, error) => complete(job, error) }
+      }
+      pool.shutdown()
+    }
+    val result = PipelineResult(ran.toSeq, skipped.toSeq)
+    failure.foreach { case (job, e) =>
+      throw new PipelineFailed(job.name, result, e)
+    }
+    result
+  }
+
+  /** One scheduled job on its worker thread: tag its Spark jobs, run
+    * it, retry NonFatal errors unless the call is aborting. Returns the
+    * error it gave up on.
+    */
+  private def attempt(job: PipelineJob, tag: String, retries: Int,
+      aborting: AtomicBoolean): Option[Throwable] = {
+    def go(left: Int): Option[Throwable] =
+      try { execute(job); None }
+      catch {
+        case NonFatal(_) if left > 0 && !aborting.get => go(left - 1)
+        case e: Throwable => Some(e)
+      }
+    val sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try {
+      if (aborting.get) Some(new CancellationException(s"${job.name} not started"))
+      else go(retries)
+    } finally sc.removeJobTag(tag)
+  }
+
+  /** Run the graph on a bounded pool: every job whose deps are done
+    * runs concurrently, up to `parallelism` at once; each failing job
+    * retries up to `maxRetries` times. Staleness as [[run]].
     */
   def runParallel(
       jobs: Seq[PipelineJob],
       parallelism: Int = 4,
-      maxRetries: Int = 0): PipelineResult = {
-    topoSort(jobs) // validates the DAG up front
-    val now = System.currentTimeMillis()
-    val byTarget = indexByTarget(jobs)
-    val indeg = collection.mutable.Map(jobs.map(j =>
-      j.target -> j.deps.count(byTarget.contains)): _*)
-    val ran = collection.mutable.ArrayBuffer[String]()
-    val ranTargets = collection.mutable.Set[String]()
-    val skipped = collection.mutable.ArrayBuffer[String]()
-
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    val done = new java.util.concurrent.ExecutorCompletionService[
-      (PipelineJob, Boolean)](pool)
-    try {
-      def submit(job: PipelineJob): Unit = {
-        // decision made after all parents completed -> ranTargets stable
-        val stale = isStale(job, now) || job.deps.exists(ranTargets.contains)
-        done.submit(() => {
-          if (stale) {
-            var attempt = 0
-            var ok = false
-            while (!ok) {
-              try {
-                execute(job)
-                ok = true
-              } catch {
-                case e: Throwable if attempt < maxRetries => attempt += 1
-              }
-            }
-          }
-          (job, stale)
-        })
-      }
-
-      jobs.filter(j => indeg(j.target) == 0).foreach(submit)
-      var remaining = jobs.size
-      while (remaining > 0) {
-        val (job, wasStale) = done.take().get()
-        remaining -= 1
-        if (wasStale) { ran += job.name; ranTargets += job.target }
-        else skipped += job.name
-        jobs.filter(_.deps.contains(job.target)).foreach { d =>
-          indeg(d.target) -= 1
-          if (indeg(d.target) == 0) submit(d)
-        }
-      }
-    } finally pool.shutdown()
-    PipelineResult(ran.toSeq, skipped.toSeq)
-  }
+      maxRetries: Int = 0): PipelineResult =
+    schedule(jobs, parallelism, maxRetries, Set.empty)
 
   /** Builder's build request (SURVEY.md §2.1 B7): restrict the graph
     * to the transitive producers of `target`, inclusive — asking for
@@ -315,8 +396,8 @@ class PipelineRunner(spark: SparkSession, root: String) {
       s"no job produces requested target '$target'")
     // explicit worklist: recursion would overflow on long chained-
     // bucket ancestries (hour-over-hour deps across a year of buckets)
-    val need = collection.mutable.Set[String]()
-    val work = collection.mutable.Stack(target)
+    val need = mutable.Set[String]()
+    val work = mutable.Stack(target)
     while (work.nonEmpty) {
       val t = work.pop()
       byTarget.get(t).foreach { j =>
@@ -336,22 +417,20 @@ class PipelineRunner(spark: SparkSession, root: String) {
     run(ancestorsOf(jobs, target))
 
   /** Transitive CONSUMERS of any of `targets`, inclusive — the dual of
-    * [[ancestorsOf]], used by forced invalidation.
+    * [[ancestorsOf]], used by forced invalidation. A breadth-first walk
+    * over the consumers index.
     */
   def descendantsOf(jobs: Seq[PipelineJob],
       targets: Set[String]): Set[String] = {
-    targets.foreach(t => require(indexByTarget(jobs).contains(t),
+    val g = new Graph(jobs)
+    targets.foreach(t => require(g.byTarget.contains(t),
       s"no job produces invalidated target '$t'"))
-    val dirty = collection.mutable.Set[String]() ++ targets
-    var grew = true
-    while (grew) {
-      grew = false
-      jobs.foreach { j =>
-        if (!dirty(j.target) && j.deps.exists(dirty)) {
-          dirty += j.target; grew = true
-        }
+    val dirty = mutable.Set[String]() ++ targets
+    val work = mutable.Queue.from(targets)
+    while (work.nonEmpty)
+      g.consumersOf(work.dequeue()).foreach { c =>
+        if (dirty.add(c.target)) work.enqueue(c.target)
       }
-    }
     dirty.toSet
   }
 
@@ -363,39 +442,13 @@ class PipelineRunner(spark: SparkSession, root: String) {
     * of the chain cannot short-circuit propagation.
     */
   def runForced(jobs: Seq[PipelineJob],
-      force: Set[String]): PipelineResult = {
-    val dirty = descendantsOf(jobs, force)
-    val now = System.currentTimeMillis()
-    val ran = collection.mutable.ArrayBuffer[String]()
-    val ranTargets = collection.mutable.Set[String]()
-    val skipped = collection.mutable.ArrayBuffer[String]()
-    topoSort(jobs).foreach { job =>
-      if (dirty(job.target) || isStale(job, now) ||
-          job.deps.exists(ranTargets.contains)) {
-        execute(job)
-        ran += job.name
-        ranTargets += job.target
-      } else skipped += job.name
-    }
-    PipelineResult(ran.toSeq, skipped.toSeq)
-  }
+      force: Set[String]): PipelineResult =
+    schedule(jobs, 1, 0, descendantsOf(jobs, force))
 
-  /** Run the graph: topo order, skipping fresh jobs; inputs are handed
-    * to each job as DataFrames read from dep targets.
+  /** Run the graph sequentially: topo order, skipping fresh jobs, and
+    * rerunning every consumer of a job that ran (transitive staleness);
+    * inputs are handed to each job as DataFrames read from dep targets.
     */
-  def run(jobs: Seq[PipelineJob]): PipelineResult = {
-    val now = System.currentTimeMillis()
-    val ran = collection.mutable.ArrayBuffer[String]()
-    val ranTargets = collection.mutable.Set[String]()
-    val skipped = collection.mutable.ArrayBuffer[String]()
-    topoSort(jobs).foreach { job =>
-      // a job is also stale transitively if a dep target just re-ran
-      if (isStale(job, now) || job.deps.exists(ranTargets.contains)) {
-        execute(job)
-        ran += job.name
-        ranTargets += job.target
-      } else skipped += job.name
-    }
-    PipelineResult(ran.toSeq, skipped.toSeq)
-  }
+  def run(jobs: Seq[PipelineJob]): PipelineResult =
+    schedule(jobs, 1, 0, Set.empty)
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
@@ -61,12 +61,13 @@ object Round10 {
   }
 
   /** The assembled q312 oracle for a (beam, rounds, nSub, nCodes) dial
-    * point — exposed for the dial sweep ([[graft.TuneDiskann]]): the
+    * point — the dial sweep's replay (sweep and plan-shape results in
+    * BASELINE.md "Round-10 measurements" and OPTIMIZATION_r14.md): the
     * shared exact CTEs, the stitched + NN-Descent-refined edge build
     * (q304's `e`), the PQ encode/ADC chain (`psc`), centroid-seeded
     * entries (`bent`), the ADC-ranked beam rounds ending in `pool`,
     * one exact re-rank of the pool, top-5, recall tail. */
-  private[graft] def diskannOracle(beam: Int, rounds: Int, nSub: Int,
+  private def diskannOracle(beam: Int, rounds: Int, nSub: Int,
       nCodes: Int): String =
     s"""${Round6c.exactRecallCte},
       ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 4, out = "e0")},
@@ -97,6 +98,12 @@ object Round10 {
     * corpus = slot ≠ 0, streamed probes = slot 0. */
   private val CorpPred = "(vec_id * 2654435761) % 10 <> 0"
   private val ProbePred = "(vec_id * 2654435761) % 10 = 0"
+
+  /** The same slot split on the Spark side: `vecSlot` is an embedding's
+    * ingest slot, and `isProbeVec` the slot-0 probe predicate that the
+    * walk artifact and the q313/q317 stream filters must agree on. */
+  private def vecSlot: Column = pmod(col("vec_id") * lit(2654435761L), lit(10L))
+  private def isProbeVec: Column = vecSlot === 0
 
   /** q313's walk dials — adviseServing's graph-pq branch constants
     * (d=24/beam=24/rounds=4/16×16 PQ, the q312 swept point). */
@@ -271,19 +278,11 @@ object Round10 {
          ORDER BY rec DESC, cand, fam LIMIT 1)) AS fam)"""
   }
 
-  /** Measurement-only probe of the q314 decision (the DuckDB dial
-    * sweep entry point): one row (mi, ml, fam). */
-  private[graft] def calSampledProbeSql: String =
-    s"""${Round6c.exactRecallCte},
-      ${calSampledDecisionSql}
-      SELECT (SELECT rec FROM smi) AS mi, (SELECT rec FROM sml) AS ml,
-        (SELECT fam FROM chosen) AS fam"""
-
   /** The assembled q313 oracle for a (beam, rounds) dial point —
-    * exposed for the sweep: slot-filtered stitched + refined edges,
-    * the ingest PQ/entry chain, the ADC walk, exact re-rank of the
-    * visited pool, alerts at cos >= 0.35. */
-  private[graft] def ingestGraphOracle(beam: Int, rounds: Int): String =
+    * slot-filtered stitched + refined edges, the ingest PQ/entry chain,
+    * the ADC walk, exact re-rank of the visited pool, alerts at
+    * cos >= 0.35. */
+  private def ingestGraphOracle(beam: Int, rounds: Int): String =
     s"""WITH ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 4,
         out = "e0", where = CorpPred)},
       ${Round9.nnDescentSql(rounds = Round9.NnRounds, d = Round9.NnDegree,
@@ -462,8 +461,7 @@ object Round10 {
       cents: DataFrame, adv: graft.operators.IndexAdvisor.Advice,
       cnorms: DataFrame, cbArt: DataFrame): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val probesAll = emb.filter(
-        pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+    val probesAll = emb.filter(isProbeVec)
       .select(col("vec_id").as("da"), col("embedding").as("ea"))
     EventTime.withShufflePartitions(s, 8) {
       graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
@@ -565,7 +563,7 @@ object Round10 {
     "q313_stream_semdedup_graphidx" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
+        val slot = vecSlot
         graft.plans.NativeExpressions.register(s)
         val corpus0 = emb.filter(slot =!= 0)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -624,8 +622,7 @@ object Round10 {
           (da BIGINT, db BIGINT, cos DOUBLE)""")
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+        val probe = src.filter(isProbeVec)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -1072,7 +1069,7 @@ object Round10 {
     "q317_stream_graph_insert" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
+        val slot = vecSlot
         graft.plans.NativeExpressions.register(s)
         val corpus0 = emb.filter(slot =!= 0)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -1122,8 +1119,7 @@ object Round10 {
           (u BIGINT, v BIGINT, cos DOUBLE)""")
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+        val probe = src.filter(isProbeVec)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {

@@ -111,11 +111,6 @@ object Round13 {
         JOIN $annr ON $exr.qd = $annr.qd AND $exr.cd = $annr.cd
         GROUP BY 1) h ON q.qd = h.qd"""
 
-  private def mvAvgSql(sel: String, dial: String, exr: String,
-      annr: String): String =
-    s"""SELECT '$sel' AS sel, '$dial' AS dial, round(AVG(recall), 3) AS rec
-      FROM (${mvTailSql(s"'$sel'", s"'$dial'", exr, annr)})"""
-
   /** Tagged per-query-doc recall rows of `ann` vs truth `exact` on
     * (qd, cd) — [[Round11]].taggedRecall lifted to doc ids. */
   private[queries] def mvTaggedRecall(sel: String, dial: String, exact: DataFrame,
@@ -141,41 +136,6 @@ object Round13 {
     val wx = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
     ms.withColumn("rnk", row_number().over(wx))
       .filter(col("rnk") <= 5).select("qd", "cd")
-  }
-
-  /** Sweep probe (q346/q347): serve recall per (nlist, nprobe) on the
-    * token index — the q334 dial grid widened to corpus-scaled cells —
-    * plus the doc-level takedown serve (survivor candidates vs the
-    * survivor truth) at the advised points and their over-probes. */
-  private[graft] def mvAdvisedProbeSql: String = {
-    val grids = Seq(16, 32)
-    val standing = grids.map(nl => mvStandingSql(nl.toString, s"g$nl"))
-      .mkString(",\n      ")
-    val serveDials = Seq((16, 1), (16, 2), (16, 4), (32, 2), (32, 4), (32, 8))
-    val serves = serveDials.map { case (nl, np) =>
-      mvServeAnnrSql(s"g$nl", np.toString, m = 10, p = s"s${nl}_$np") }
-      .mkString(",\n      ")
-    val tdDials = Seq((16, 2), (16, 4), (32, 4), (32, 8))
-    val tds = tdDials.map { case (nl, np) =>
-      mvServeAnnrSql(s"g$nl", np.toString, m = 10, p = s"t${nl}_$np",
-        candPred = MvSurvPred.replace("tid", "c.tid")) }
-      .mkString(",\n      ")
-    val exrt =
-      s"""exrt AS MATERIALIZED (SELECT qd, cd FROM (SELECT qd, cd,
-          row_number() OVER (PARTITION BY qd ORDER BY score DESC, cd) AS rnk
-        FROM ms WHERE NOT ($MvTombPred)) WHERE rnk <= 5)"""
-    val rows = (serveDials.map { case (nl, np) =>
-      mvAvgSql("serve", s"nl${nl}np$np", "exr", s"s${nl}_${np}annr") } ++
-      tdDials.map { case (nl, np) =>
-        mvAvgSql("takedown", s"nl${nl}np$np", "exrt", s"t${nl}_${np}annr") })
-      .mkString(" UNION ALL ")
-    s"""WITH ${Round11b.maxsimBaseSql},
-      ${mvSq8Sql()},
-      $standing,
-      $serves,
-      $exrt,
-      $tds
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
   }
 
   // ---- q348: the q343 ingest chain with the token-index dials as SQL
@@ -269,87 +229,6 @@ object Round13 {
          FROM mvst)),
       mvnp AS (SELECT LEAST((SELECT nlist FROM mvnl), GREATEST(1,
         ($measNp * (SELECT nlist FROM mvnl)) // 16)) AS np)"""
-
-  /** Sweep probe (q348): alert coverage of the advised-dial ingest
-    * scorer vs the exact alert set — the (nlist, np) grid the advised
-    * dials land on at the two SFs, m=40, the q343 thresholds. */
-  private[graft] def mvIngestAdvProbeSql: String = {
-    // one shared standing/exact prefix at (16, 4) == q343's point;
-    // extra dials re-derive their own qa/cd/... chains
-    val base = s"""$mvIngestTokSql,
-      ${mvIngestChainSql("16", "4", m = 40, minScore = "0")}"""
-    val extraDials = Seq((32, 4), (32, 8))
-    val extra = extraDials.map { case (nl, np) =>
-      s"""x${nl}_${np}cent AS MATERIALIZED (SELECT tid AS centroid_id, e AS centroid
-        FROM (SELECT * FROM stok ORDER BY tid LIMIT $nl)),
-      x${nl}_${np}ca AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT s.tid, c.centroid_id,
-            round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM stok s, x${nl}_${np}cent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r = 1),
-      x${nl}_${np}qa AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT p.tid, c.centroid_id,
-            round(SUM(CAST(p.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM ptok p, x${nl}_${np}cent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r <= $np),
-      x${nl}_${np}cd AS (SELECT DISTINCT p.doc AS qd, s.doc AS cd
-        FROM x${nl}_${np}qa JOIN ptok p ON x${nl}_${np}qa.tid = p.tid
-        JOIN x${nl}_${np}ca ON x${nl}_${np}qa.centroid_id = x${nl}_${np}ca.centroid_id
-        JOIN stok s ON x${nl}_${np}ca.tid = s.tid),
-      x${nl}_${np}apx AS (SELECT x.qd, x.cd, q.tid AS qt,
-          MAX(CAST(list_sum(list_transform(range(1, 65), i -> qs.qc[i] * cs.qc[i])) AS BIGINT)
-            * cs.rc) AS amx
-        FROM x${nl}_${np}cd x JOIN ptok q ON q.doc = x.qd JOIN stok c ON c.doc = x.cd
-        JOIN mvpsq8 qs ON q.tid = qs.tid JOIN mvsq8 cs ON c.tid = cs.tid
-        GROUP BY 1, 2, 3),
-      x${nl}_${np}pool AS (SELECT qd, cd FROM (SELECT qd, cd,
-          row_number() OVER (PARTITION BY qd ORDER BY ascore DESC, cd) AS pr
-        FROM (SELECT qd, cd, CAST(SUM(amx) AS BIGINT) AS ascore
-          FROM x${nl}_${np}apx GROUP BY 1, 2)) WHERE pr <= 40),
-      x${nl}_${np}ex0 AS (SELECT pl.qd, pl.cd, q.tid AS qt, c.tid AS ct,
-          CAST(round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.e[i.i] AS DOUBLE))
-            / (sqrt(ANY_VALUE(list_sum(list_transform(q.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-             * sqrt(ANY_VALUE(list_sum(list_transform(c.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))))
-            * 1000000) AS BIGINT) AS mc
-        FROM x${nl}_${np}pool pl JOIN ptok q ON q.doc = pl.qd JOIN stok c ON c.doc = pl.cd,
-          (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2, 3, 4),
-      x${nl}_${np}al AS (SELECT qd AS da, cd AS db, score FROM (
-          SELECT qd, cd, CAST(SUM(mx2) AS BIGINT) AS score FROM (
-            SELECT qd, cd, qt, MAX(mc) AS mx2 FROM x${nl}_${np}ex0 GROUP BY 1, 2, 3)
-          GROUP BY 1, 2))"""
-    }.mkString(",\n      ")
-    val exact =
-      s"""exal0 AS MATERIALIZED (SELECT q.doc AS qd, c.doc AS cd,
-          q.tid AS qt, c.tid AS ct,
-          CAST(round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.e[i.i] AS DOUBLE))
-            / (sqrt(ANY_VALUE(list_sum(list_transform(q.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-             * sqrt(ANY_VALUE(list_sum(list_transform(c.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))))
-            * 1000000) AS BIGINT) AS mc
-        FROM ptok q, stok c, (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2, 3, 4),
-      exal AS MATERIALIZED (SELECT qd AS da, cd AS db, score FROM (
-        SELECT qd, cd, CAST(SUM(mx2) AS BIGINT) AS score FROM (
-          SELECT qd, cd, qt, MAX(mc) AS mx2 FROM exal0 GROUP BY 1, 2, 3)
-        GROUP BY 1, 2) y)"""
-    def alName(nl: Int, np: Int) =
-      if ((nl, np) == ((16, 4))) "al" else s"x${nl}_${np}al"
-    val dials = Seq((16, 4)) ++ extraDials
-    val thrs = Seq(800000L, 900000L, 1000000L)
-    val rows = (for ((nl, np) <- dials; thr <- thrs) yield
-      s"""SELECT 'nl${nl}np$np' AS sel, 'thr$thr' AS dial,
-        CAST((SELECT COUNT(*) FROM ${alName(nl, np)} a JOIN exal
-          ON a.da = exal.da AND a.db = exal.db
-          WHERE exal.score >= $thr AND a.score >= $thr) AS DOUBLE)
-        / GREATEST(1, (SELECT COUNT(*) FROM exal WHERE score >= $thr)) AS rec""")
-      .mkString(" UNION ALL ")
-    s"""WITH $base,
-      $extra,
-      $exact
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
 
   // ---- q349: graph-family drift response --------------------------------
 
@@ -448,27 +327,6 @@ object Round13 {
         src = "b0", out = "eb", p = "rb", tbl = "gwt")},
       ${worldServeSql("wt", "eb", "tb")}"""
 
-  /** Sweep probe (q349): edge-churn stats per scenario + avg recall of
-    * the kept/stale/repaired/rebuilt serves in their worlds — run in
-    * DuckDB at both SFs BEFORE any Spark wiring. */
-  private[graft] def graphDriftProbeSql: String = {
-    def avg(sel: String, dial: String, exr: String, annr: String) =
-      s"""SELECT '$sel' AS sel, '$dial' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql(sel, dial, exr, annr)})"""
-    s"""WITH $graphDriftCtes
-      SELECT * FROM (
-        SELECT 'iso' AS sel, 'echurn' AS dial,
-          CAST((SELECT moved FROM mvi) AS DOUBLE) / (SELECT ne FROM ne) AS rec
-        UNION ALL
-        SELECT 'trunc', 'echurn',
-          CAST((SELECT moved FROM mvt) AS DOUBLE) / (SELECT ne FROM ne)
-        UNION ALL ${avg("iso", "kept", "wiexr", "kiannr")}
-        UNION ALL ${avg("trunc", "stale", "wtexr", "tsannr")}
-        UNION ALL ${avg("trunc", "repaired", "wtexr", "trannr")}
-        UNION ALL ${avg("trunc", "rebuilt", "wtexr", "tbannr")})
-      ORDER BY sel, dial"""
-  }
-
   // ---- q351: the hybrid serve's vector arm through the advisor ----------
 
   /** Exact top-20 vector ranks (rv) for the 20 hybrid query docs —
@@ -519,43 +377,6 @@ object Round13 {
     * scale, SQ8 resident at nu=500 (36 kB) and evicted by its own
     * bytes at nu=2000 (144 kB), IVFPQ always resident. */
   private val HybMemBudget = 60000L
-
-  /** Sweep probe (q351): the two arms' recall@20 at the measured
-    * configs, the re-derived sf0.1 IVFPQ dials, and each arm's FUSED
-    * recall vs the exact fused truth — both SFs, BEFORE wiring. */
-  private[graft] def hybAdvisedProbeSql: String = {
-    def avgF(dial: String, fused: String) =
-      s"""SELECT 'fused' AS sel, '$dial' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql("fused", dial, "tfused", fused)})"""
-    s"""${Round6c.exactRecallCte},
-      $hybVxSql,
-      nq20 AS (SELECT COUNT(DISTINCT qid) AS nq FROM vx),
-      ${Round11b.sq8StandingSql("")},
-      ${sq8Rv20Sql("8", 24, "s8")},
-      ${sq8Rv20Sql("10", 24, "s10")},
-      ${Round9.ivfPqSqlE("16", "10", HybMcE, nSub = 16, nCodes = 16,
-        prefix = "p1")},
-      ${pqRv20Sql("p1", "q1")},
-      ${Round9.ivfPqSqlE("32", "20", HybMcE, nSub = 16, nCodes = 16,
-        prefix = "p2")},
-      ${pqRv20Sql("p2", "q2")},
-      ${Round12.bm25DocSql(20)},
-      ${Round12.rrfFuseSql("vx", "t")},
-      ${Round12.rrfFuseSql("s8rv", "a")},
-      ${Round12.rrfFuseSql("s10rv", "a2")},
-      ${Round12.rrfFuseSql("q1rv", "b")},
-      ${Round12.rrfFuseSql("q2rv", "c")}
-      SELECT * FROM (
-        SELECT 'arm' AS sel, 'sq8np8' AS dial, round(rec, 3) AS rec FROM (${rec20Sql("s8rv")})
-        UNION ALL SELECT 'arm', 'sq8np10', round(rec, 3) FROM (${rec20Sql("s10rv")})
-        UNION ALL SELECT 'arm', 'pq16np10', round(rec, 3) FROM (${rec20Sql("q1rv")})
-        UNION ALL SELECT 'arm', 'pq32np20', round(rec, 3) FROM (${rec20Sql("q2rv")})
-        UNION ALL ${avgF("sq8np8", "afused")}
-        UNION ALL ${avgF("sq8np10", "a2fused")}
-        UNION ALL ${avgF("pq16np10", "bfused")}
-        UNION ALL ${avgF("pq32np20", "cfused")})
-      ORDER BY sel, dial"""
-  }
 
   // ---- q350: the training pipeline's INGEST loop -------------------------
 

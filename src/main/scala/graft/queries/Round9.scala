@@ -64,8 +64,8 @@ object Round9 {
       Seq(rev, und, cand, score, keep).mkString(",\n      ")
     }.mkString(",\n      ")
 
-  /** q304's dials, picked by the measured sf0.1 sweep (TuneRecall
-    * graph mode, one variable at a time): NN-Descent rounds saturate at
+  /** q304's dials, picked by the measured sf0.1 sweep (graph mode,
+    * one variable at a time; BASELINE.md "Round 9"): NN-Descent rounds saturate at
     * 2 (3 adds +0.004), degree 24 over 16 is +0.11, beam 24 over 16 is
     * +0.08; the chosen point measured recall@5 = 0.924 at sf0.1.
     * Per-query serving cost is beam·(d+1)·rounds = 2400 cosines —

@@ -11,9 +11,12 @@ import scala.concurrent.ExecutionContext
   * overlap on a small-core host, and a body that is never wrapped in
   * `blocking{}` does not grow the pool (the round-14 advice item). A
   * cached pool of daemon threads keeps job SUBMISSION independent of
-  * the compute pool: threads exist only while jobs are in flight, and
-  * each is created from the submitting thread, so Spark's inheritable
-  * thread-local job properties (description/group) propagate.
+  * the compute pool. Spark's inheritable thread-local job properties
+  * (description, group, tags) are copied only when a thread is
+  * CREATED, and the cached pool reuses an idle thread for up to 60 s:
+  * a body may run with the properties of whichever earlier submitter
+  * created its thread, not its own. A body that needs a property sets
+  * it itself, inside the body.
   */
 object Jobs {
   implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(

@@ -230,6 +230,88 @@ class PipelineSpec extends SparkTestBase {
     assert(r2.ran.isEmpty && r2.skipped.size == 4)
   }
 
+  test("runParallel: a failure cancels and drains its siblings before it surfaces") {
+    val root = Files.createTempDirectory("graft_drain").toString
+    val sc = spark.sparkContext
+    val started = java.nio.file.Paths.get(root, "slow-started")
+    val src = PipelineJob("src", "src.parquet", Nil)(
+      (s, _) => Seq(1L).toDF("id"))
+    // one Spark job of 4 tasks x 100 rows x 100 ms: still running when
+    // its sibling fails
+    val slow = PipelineJob("slow", "slow.parquet", Seq("src.parquet")) { (s, _) =>
+      val flag = started.toString
+      s.range(0, 400, 1, 4).map { i =>
+        val f = java.nio.file.Paths.get(flag)
+        if (!Files.exists(f)) scala.util.Try(Files.createFile(f))
+        Thread.sleep(100)
+        i
+      }.toDF("id")
+    }
+    val boom = PipelineJob("boom", "boom.parquet", Seq("src.parquet")) { (s, _) =>
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!Files.exists(started) && System.nanoTime() < deadline) Thread.sleep(20)
+      throw new IllegalStateException("boom")
+    }
+    val runner = new PipelineRunner(spark, root)
+    val e = intercept[PipelineFailed] {
+      runner.runParallel(Seq(src, slow, boom), parallelism = 4)
+    }
+    assert(Files.exists(started), "the sibling's Spark job never started")
+    assert(e.job == "boom" && e.getCause.getMessage == "boom")
+    assert(e.partial.ran == Seq("src") && e.partial.skipped.isEmpty, e.partial)
+    // the status store trails the scheduler by one listener-bus hop
+    val deadline = System.nanoTime() + 2L * 1000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      s"Spark jobs outlived the failed run: ${sc.statusTracker.getActiveJobIds.mkString(",")}")
+    val success = java.nio.file.Paths.get(root, "slow.parquet", "_SUCCESS")
+    assert(!Files.exists(success))
+    Thread.sleep(1500)
+    assert(!Files.exists(success), "the cancelled sibling committed after the call returned")
+  }
+
+  test("runParallel: fatal errors are not retried") {
+    val root = Files.createTempDirectory("graft_fatal").toString
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bad = PipelineJob("bad", "bad.parquet", Nil) { (s, _) =>
+      attempts.incrementAndGet()
+      throw new LinkageError("fatal")
+    }
+    val e = intercept[PipelineFailed] {
+      new PipelineRunner(spark, root).runParallel(Seq(bad), parallelism = 2, maxRetries = 2)
+    }
+    assert(attempts.get() == 1)
+    assert(e.getCause.isInstanceOf[LinkageError])
+  }
+
+  test("graph walks stay linear: a year of hourly buckets") {
+    val hours = (0 until 8760).map(h => f"h$h%04d")
+    val tpls = Seq(
+      TimedJobTemplate("clean", "clean/%dt", Seq("ingest/dt=%dt"))((_, in, dt) => in(s"ingest/dt=$dt")),
+      TimedJobTemplate("rollup", "rollup/%dt", Seq("clean/%dt"))((_, in, dt) => in(s"clean/$dt")),
+      TimedJobTemplate("enrich", "enrich/%dt", Seq("rollup/%dt", "dim/customer"))(
+        (_, in, dt) => in(s"rollup/$dt")))
+    val jobs = TimeExpansion.expandAll(tpls, hours) :+
+      PipelineJob("summary", "summary", hours.map(h => s"enrich/$h"))(
+        (_, in) => in.values.reduce(_ unionByName _))
+    assert(jobs.size == 26281)
+    // everything fresh: the walk does no Spark work
+    val runner = new PipelineRunner(spark, "/tmp/unused") {
+      override def isStale(job: PipelineJob, now: Long): Boolean = false
+    }
+    val t0 = System.nanoTime()
+    val r = runner.runParallel(jobs)
+    val anc = runner.ancestorsOf(jobs, "summary")
+    val desc = runner.descendantsOf(jobs, Set("clean/h0000"))
+    val secs = (System.nanoTime() - t0) / 1e9
+    info(f"runParallel + ancestorsOf + descendantsOf over ${jobs.size} jobs: $secs%.3f s")
+    assert(r.ran.isEmpty && r.skipped.size == jobs.size)
+    assert(anc.size == jobs.size)
+    assert(desc == Set("clean/h0000", "rollup/h0000", "enrich/h0000", "summary"))
+    assert(secs < 2.0, f"graph walks took $secs%.2f s")
+  }
+
   test("Compact merges a many-small-file table, preserving rows") {
     val src = Files.createTempDirectory("graft_compact_src").toString
     val dst = Files.createTempDirectory("graft_compact_dst").toString
